@@ -14,7 +14,8 @@ stale evidence.
 Normalization strips run-to-run noise so the fingerprint is stable
 across sessions but sensitive to plan-shape changes: expression ids
 (#123 grow monotonically per session), exchange/plan ids, file-index
-locations (absolute paths + partition counts), RDD scan ids (plans
+locations (absolute paths + partition counts), Range split counts
+(the default is the host's core count), RDD scan ids (plans
 that localCheckpoint embed per-session RDD numbers), and whitespace.
 Node structure, operator choice, pushed filters, read schemas, and
 partitioning expressions all survive — exactly the things a replan
@@ -68,6 +69,8 @@ _SUBS = (
     (re.compile(r"ExistingRDD\b[^\n]*"), "ExistingRDD"),
     (re.compile(r"LogicalRDD\b[^\n]*"), "LogicalRDD"),
     (re.compile(r"InMemoryFileIndex\([^)]*\)\S*"), "InMemoryFileIndex"),
+    # Range's split count defaults to the core count ("splits=Some(4)")
+    (re.compile(r"splits=Some\(\d+\)"), "splits=Some(N)"),
     (re.compile(r"file:/\S+"), "file:"),
     # attribute qualifiers leak per-session state: whether a shared
     # catalog table (e.g. the bucketed edge table, whose name carries

@@ -136,3 +136,14 @@ def test_normalizer_keeps_pushed_filter_literals():
     assert normalize_plan(s1) == normalize_plan(s2)
     assert normalize_plan(s1) != normalize_plan(s3)
     assert "ScalarSubquery#N" in normalize_plan(s1)
+
+
+def test_normalizer_masks_range_split_count():
+    """A Range node's default split count is the host's core count, so it
+    is masked; the range bounds still fingerprint."""
+    from mrc_spark_jobs_pubmed_spark.planfp import normalize_plan
+
+    four = "Arguments: Range (0, 1, step=1, splits=Some(4))"
+    many = "Arguments: Range (0, 1, step=1, splits=Some(32))"
+    assert normalize_plan(four) == normalize_plan(many)
+    assert normalize_plan(four) != normalize_plan(four.replace("(0, 1,", "(0, 2,"))
