@@ -74,9 +74,9 @@ def mock_search(year: int, month: int) -> tuple[str, int]:
 def mock_fetcher(url: str) -> str:
     """Deterministic stand-in for efetch: returns an NDJSON page.
 
-    Every ~7th page simulates one transient rate-limit response before
-    succeeding is modeled in tests via a wrapping fetcher; this base mock
-    always succeeds with 3 article records derived from the URL.
+    It always succeeds, with 3 article records derived from the URL.
+    Tests model transient rate-limit responses by wrapping it in a
+    fetcher that first answers with a RETRY_MARKERS string.
     """
     seed = hashlib.md5(url.encode()).hexdigest()[:8]
     records = []
@@ -143,8 +143,8 @@ def http_fetcher(url: str, post: Callable = _default_post) -> str:
     """requests-backed `fetcher` seam: efetch page → body text.
 
     Returns the body verbatim — transient-failure classification
-    (RETRY_MARKERS) and the bounded retry loop live in `fetch_pages`, so
-    the mock and HTTP backends share one retry policy.
+    (RETRY_MARKERS) and the bounded retry loop live in `fetch_with_retry`,
+    so the mock and HTTP backends share one retry policy.
     """
     return post(url).text
 
@@ -197,42 +197,40 @@ def expand_pages(work: DataFrame, page_size: int = PAGE_SIZE) -> DataFrame:
     )
 
 
+def fetch_with_retry(
+    fetcher: Callable[[str], str], url: str, max_retries: int = 5, backoff_s: float = 0.0
+) -> tuple[str | None, int]:
+    """Bounded retry on RETRY_MARKERS → (payload, attempts), payload None
+    when every attempt answered with a marker. The reference retried
+    FOREVER (bug B5); a capped failure lets downstream quarantine the page
+    instead of hanging an executor."""
+    for attempt in range(1, max_retries + 1):
+        got = fetcher(url)
+        if not any(m in got for m in RETRY_MARKERS):
+            return got, attempt
+        if backoff_s:
+            time.sleep(backoff_s)
+    return None, max_retries
+
+
 def fetch_pages(
     pages: DataFrame,
     fetcher: Callable[[str], str] = mock_fetcher,
     max_retries: int = 5,
     backoff_s: float = 0.0,
-    parallelism: int | None = None,
 ) -> DataFrame:
-    """A3: paginated fetch with bounded retry, as mapInPandas.
-
-    The reference's per-item worker slept 3 s and retried FOREVER on the
-    marker strings (bug B5); here attempts are capped and the failure
-    surfaces as payload=NULL with the attempt count, so downstream can
-    quarantine instead of hanging an executor. Fetch concurrency is the
-    partition count — the declarative version of the reference's
-    4-workers×3 cap.
-    """
+    """A3: paginated fetch with `fetch_with_retry`, as mapInPandas; a page
+    that exhausted its attempts surfaces as payload=NULL. Fetch concurrency
+    is the page table's partition count — the declarative version of the
+    reference's 4-workers×3 cap."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload, attempts = None, 0
-                while attempts < max_retries:
-                    attempts += 1
-                    got = fetcher(row.page_url)
-                    if not any(m in got for m in RETRY_MARKERS):
-                        payload = got
-                        break
-                    if backoff_s:
-                        time.sleep(backoff_s)
-                out.append(
-                    (row.page_key, row.year, row.month, row.offset, payload, attempts)
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FETCH_SCHEMA.fields]
-            )
+            out = [
+                (row.page_key, row.year, row.month, row.offset,
+                 *fetch_with_retry(fetcher, row.page_url, max_retries, backoff_s))
+                for row in pdf.itertuples(index=False)
+            ]
+            yield pd.DataFrame(out, columns=FETCH_SCHEMA.names)
 
-    src = pages.repartition(parallelism) if parallelism else pages
-    return src.mapInPandas(run, FETCH_SCHEMA)
+    return pages.mapInPandas(run, FETCH_SCHEMA)

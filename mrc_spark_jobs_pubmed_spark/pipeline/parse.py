@@ -29,39 +29,24 @@ ARTICLE_JSON_SCHEMA = T.StructType(
 
 
 def parse_articles(fetched: DataFrame, require_abstract: bool = True) -> DataFrame:
-    """(page_key, payload NDJSON) → (pmid, year, abstract).
-
-    explode(split(payload, '\\n')) gives one row per NDJSON line (A9);
-    from_json applies the declared schema (A8); the has-abstract filter
-    is a Catalyst predicate on the nested field (A10) and the year comes
-    from the page key, not a filename substring hack (A12, cf.
-    extract_keywords_from_all_abstracts.py:92).
+    """(page_key, payload NDJSON) → (pmid, year, abstract, page_key): the
+    good side of `parse_articles_quarantine`, by default only the articles
+    that have an abstract — a Catalyst predicate on the nested field (A10).
     """
-    lines = fetched.filter(F.col("payload").isNotNull()).select(
-        "page_key",
-        "year",
-        F.explode(F.split("payload", "\n")).alias("line"),
-    )
-    parsed = lines.select(
-        "page_key",
-        "year",
-        F.from_json("line", ARTICLE_JSON_SCHEMA).alias("rec"),
-    ).filter(F.col("rec.pmid").isNotNull())
-    out = parsed.select(
-        F.col("rec.pmid").alias("pmid"),
-        "year",
-        F.col("rec.medent.abstract").alias("abstract"),
-        "page_key",
-    )
+    articles, _ = parse_articles_quarantine(fetched)
     if require_abstract:
-        out = out.filter(F.col("abstract").isNotNull())
-    return out
+        articles = articles.filter(F.col("abstract").isNotNull())
+    return articles
 
 
 def parse_articles_quarantine(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Like parse_articles, but malformed lines are QUARANTINED, not
-    silently dropped: returns (articles, rejects) where rejects carries
-    the raw line + page_key for replay/inspection.
+    """Parse fetched pages into (articles, rejects): malformed lines are
+    QUARANTINED with their raw text and page_key, not silently dropped.
+
+    explode(split(payload, '\\n')) gives one row per NDJSON line (A9) and
+    from_json applies the declared schema (A8); the year comes from the
+    page key, not a filename substring hack (A12, cf.
+    extract_keywords_from_all_abstracts.py:92).
 
     At scale silent drops are invisible data loss — a feed change that
     breaks 1% of lines should surface as a countable rejects table, the

@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def validate(input_path: str, output_path: str) -> None:
@@ -67,15 +67,21 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def existing_keys(spark: SparkSession, path: str, key_col: str) -> DataFrame | None:
-    """Distinct key values already present in a parquet sink (None if the
-    sink doesn't exist yet)."""
+def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFrame | None:
+    """Distinct `key` values already in a parquet sink; None if the path
+    does not exist yet. The sink is read with the key's schema, so a sink
+    holding no data files gives zero keys; any other read error raises."""
     if not os.path.exists(path):
         return None
-    try:
-        return spark.read.parquet(path).select(key_col).distinct()
-    except Exception:  # empty/corrupt dir → treat as absent
-        return None
+    return spark.read.schema(T.StructType([key])).parquet(path).select(key.name).distinct()
+
+
+def pending(df: DataFrame, spark: SparkSession, path: str, key_col: str) -> DataFrame:
+    """A5's resume rule: the rows of `df` whose `key_col` is not yet in
+    the parquet sink at `path`, as an anti-join against the sink's keys
+    (a column-pruned scan, broadcast when small)."""
+    done = existing_keys(spark, path, df.schema[key_col])
+    return df if done is None else df.join(done, key_col, "left_anti")
 
 
 def idempotent_write(
@@ -85,16 +91,11 @@ def idempotent_write(
     key_col: str,
     partition_by: tuple[str, ...] = (),
 ) -> int:
-    """A5 as dataflow: append only rows whose key is not in the sink.
-
-    Returns the number of rows written. Works at any scale: the done-key
-    set is a column-pruned parquet scan, and the anti-join broadcasts it
-    when small. (In streaming the checkpoint subsumes this; for batch
-    re-runs this is the resume semantics the reference implemented with
-    per-blob existence checks.)
-    """
-    done = existing_keys(spark, path, key_col)
-    fresh = df if done is None else df.join(done, key_col, "left_anti")
+    """A5 as dataflow: append the rows of `df` whose key is not in the sink
+    yet (`pending`) and return how many were written. That is two actions
+    over `df`, so a costly plan such as a fetch is better filtered with
+    `pending` first and written once, as `run.run_pipeline` does."""
+    fresh = pending(df, spark, path, key_col)
     n = fresh.count()
     if n:
         write_partitioned(fresh, path, partition_by, mode="append")

@@ -28,7 +28,7 @@ from pyspark.sql.datasource import (
 
 from mrc_spark_jobs_pubmed_spark.pipeline.ingest import (
     PAGE_SIZE,
-    RETRY_MARKERS,
+    fetch_with_retry,
     mock_fetcher,
     mock_search,
 )
@@ -63,14 +63,9 @@ class PubmedReader(DataSourceReader):
         y, m = partition.year, partition.month
         url, total = mock_search(y, m)
         for offset in range(0, total, self.page_size):
-            page_url = f"{url}&retstart={offset}"
-            payload, attempts = None, 0
-            while attempts < self.max_retries:
-                attempts += 1
-                got = mock_fetcher(page_url)
-                if not any(marker in got for marker in RETRY_MARKERS):
-                    payload = got
-                    break
+            payload, attempts = fetch_with_retry(
+                mock_fetcher, f"{url}&retstart={offset}", self.max_retries
+            )
             yield (f"{y}_{m}_num_{offset}", y, m, offset, payload, attempts)
 
 

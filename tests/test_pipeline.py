@@ -5,6 +5,8 @@ keywords v1/v2 → idempotent partitioned sinks."""
 from __future__ import annotations
 
 import json
+import os
+from urllib.parse import parse_qs, urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -285,3 +287,152 @@ def test_http_adapters_with_canned_responses(spark):
     for r in fetched:
         assert r.payload is not None and "pmid" in r.payload
         assert r.n_attempts == 2  # one rate-limited attempt, one success
+
+
+# --- fetch-once / resume-before-fetch contract of run_pipeline --------------
+
+
+def _counting_fetcher(counter_dir, fail=lambda page_key: False):
+    """`ingest.mock_fetcher` that appends one byte per call to
+    `{counter_dir}/{page_key}`. The fetcher runs in Python workers, so the
+    count lives in files: one-byte O_APPEND writes are atomic across
+    processes. A page for which `fail(page_key)` is true always answers with
+    a retry marker."""
+    counter_dir.mkdir()
+    counter_dir = str(counter_dir)
+
+    def fetch(url: str) -> str:
+        q = parse_qs(urlparse(url).query)
+        key = f"{q['year'][0]}_{q['month'][0]}_num_{q['retstart'][0]}"
+        fd = os.open(os.path.join(counter_dir, key), os.O_WRONLY | os.O_APPEND | os.O_CREAT)
+        try:
+            os.write(fd, b".")
+        finally:
+            os.close(fd)
+        if fail(key):
+            return ingest.RETRY_MARKERS[0]
+        return ingest.mock_fetcher(url)
+
+    return fetch
+
+
+def _calls(counter_dir) -> dict[str, int]:
+    """Fetcher calls per page_key since the directory was created."""
+    return {p.name: p.stat().st_size for p in counter_dir.iterdir()}
+
+
+def _all_pages(spark, year: int) -> set[str]:
+    work = ingest.build_work_table(spark, year, year)
+    return {r.page_key for r in ingest.expand_pages(work).collect()}
+
+
+_KW2_SCHEMA = "pmid string, keywords string, year int"
+
+
+def _sink_digests(spark, out: str) -> tuple:
+    """Order-independent (row count, hash sum) of each of the three sinks."""
+
+    def digest(df):
+        n, h = df.select(
+            F.count("*"), F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(2**31)))
+        ).first()
+        return n, h
+
+    return (
+        digest(spark.read.parquet(f"{out}/articles")),
+        digest(spark.read.parquet(f"{out}/keywords_v1")),
+        digest(spark.read.schema(_KW2_SCHEMA).csv(f"{out}/keywords_v2")),
+    )
+
+
+def test_pipeline_fetches_each_page_once_and_resume_fetches_none(spark, tmp_path):
+    out = str(tmp_path / "pm")
+    run1, run2 = tmp_path / "calls1", tmp_path / "calls2"
+    run_pipeline(spark, out, 2020, 2020, fetcher=_counting_fetcher(run1))
+    calls = _calls(run1)
+    assert set(calls) == _all_pages(spark, 2020)
+    assert set(calls.values()) == {1}
+    before = _sink_digests(spark, out)
+    assert all(n > 0 for n, _ in before)
+
+    run_pipeline(spark, out, 2020, 2020, fetcher=_counting_fetcher(run2))
+    assert _calls(run2) == {}
+    assert _sink_digests(spark, out) == before
+
+
+def test_pipeline_refetches_only_the_page_that_exhausted_retries(spark, tmp_path):
+    out = str(tmp_path / "pm")
+    pages = sorted(_all_pages(spark, 2020))
+    bad = pages[len(pages) // 2]
+    run1, run2 = tmp_path / "calls1", tmp_path / "calls2"
+    run_pipeline(spark, out, 2020, 2020,
+                 fetcher=_counting_fetcher(run1, lambda key: key == bad))
+    calls = _calls(run1)
+    assert calls.pop(bad) == 5  # run_pipeline's bounded retry gave up
+    assert set(calls) == set(pages) - {bad} and set(calls.values()) == {1}
+    arts = spark.read.parquet(f"{out}/articles")
+    assert arts.filter(F.col("page_key") == bad).count() == 0
+    n1 = arts.count()
+
+    run_pipeline(spark, out, 2020, 2020, fetcher=_counting_fetcher(run2))
+    assert _calls(run2) == {bad: 1}
+    arts = spark.read.parquet(f"{out}/articles")
+    n_bad = arts.filter(F.col("page_key") == bad).count()
+    assert n_bad > 0 and arts.count() == n1 + n_bad
+    kw2 = spark.read.schema(_KW2_SCHEMA).csv(f"{out}/keywords_v2")
+    assert kw2.count() == arts.count()
+
+
+def test_pipeline_with_every_page_failing_writes_empty_keyword_sinks(spark, tmp_path):
+    out = str(tmp_path / "pm")
+    calls = tmp_path / "calls"
+    dfs = run_pipeline(spark, out, 2020, 2020,
+                       fetcher=_counting_fetcher(calls, lambda key: True))
+    assert set(_calls(calls).values()) == {5}
+    assert dfs["articles"].count() == 0
+    assert spark.read.schema("word string, pmid string").parquet(
+        f"{out}/keywords_v1").count() == 0
+    assert spark.read.schema(_KW2_SCHEMA).csv(f"{out}/keywords_v2").count() == 0
+    # a sink directory without data files holds zero keys
+    key = dfs["pages"].schema["page_key"]
+    assert sinks.existing_keys(spark, f"{out}/articles", key).count() == 0
+
+
+def test_pipeline_keyword_sinks_hold_only_the_latest_year_range(spark, tmp_path):
+    out = str(tmp_path / "pm")
+    run_pipeline(spark, out, 2019, 2019)
+    run_pipeline(spark, out, 2020, 2020)
+    arts = spark.read.parquet(f"{out}/articles")
+    assert {r.year for r in arts.select("year").distinct().collect()} == {2019, 2020}
+    pmids_2020 = {r.pmid for r in arts.filter(F.col("year") == 2020).collect()}
+    kw2 = spark.read.schema(_KW2_SCHEMA).csv(f"{out}/keywords_v2").collect()
+    assert {r.year for r in kw2} == {2020}
+    assert sorted(r.pmid for r in kw2) == sorted(pmids_2020)
+    kw1 = {r.pmid for r in spark.read.parquet(f"{out}/keywords_v1").collect()}
+    assert kw1 and kw1 <= pmids_2020
+
+
+def test_pipeline_raises_on_a_corrupt_articles_sink(spark, tmp_path):
+    """A sink that cannot be read is an error, not "nothing written yet":
+    treating it as absent would re-fetch every page and append duplicates."""
+    # a sink whose only data file is garbage (a torn write)
+    torn = tmp_path / "torn"
+    (torn / "articles" / "year=2020").mkdir(parents=True)
+    (torn / "articles" / "year=2020" / "part-garbage.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_pipeline(spark, str(torn), 2020, 2020)
+    assert [p.name for p in (torn / "articles").rglob("*.parquet")] == ["part-garbage.parquet"]
+
+    # a garbage file next to good ones: the good rows stay as they were
+    out = tmp_path / "pm"
+    run_pipeline(spark, str(out), 2020, 2020)
+    files = sorted(str(p) for p in (out / "articles").rglob("*.parquet"))
+    n = spark.read.parquet(*files).count()
+    garbage = out / "articles" / "year=2020" / "part-garbage.parquet"
+    garbage.write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_pipeline(spark, str(out), 2020, 2020)
+    assert sorted(str(p) for p in (out / "articles").rglob("*.parquet")) == sorted(
+        files + [str(garbage)]
+    )
+    assert spark.read.parquet(*files).count() == n
