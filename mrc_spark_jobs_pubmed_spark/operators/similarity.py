@@ -17,10 +17,10 @@ oracle accumulate identically (same element order, same width).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mrc_spark_jobs_pubmed_spark import storage
 
 N_BUCKET_BITS = 8  # sign bits → 256 buckets
 
@@ -190,6 +190,18 @@ TILE_TARGET_ROWS = 2500  # rows per GEMM block: tile <= 2500^2 * 8B = 50 MB
 # (measured: expression wins at sf1's 20k rows, GEMM wins 2.2-2.7x at
 # sf20's 400k; the linear models cross near ~32k — 64k keeps a margin).
 GEMM_MIN_ROWS = 65536
+
+
+def estimated_rows(emb: DataFrame) -> int:
+    """Embedding row count estimated from file metadata — NO job (a
+    count() measured 0.12 s, the whole GEMM dispatch margin at small
+    sf). Embedding rows are ~256-310 parquet bytes (64 float32 + ids;
+    float arrays barely compress), so bytes/256 over-estimates slightly
+    — harmless: the estimate only picks a branch and sizes chunks, and
+    every branch it picks is exact. A DataFrame with no input files
+    (built in memory) estimates 0."""
+    files = emb.inputFiles()
+    return storage.stat(emb.sparkSession, *files)[0] // 256 if files else 0
 
 
 def topk_pairs_blocked(
@@ -602,18 +614,7 @@ def topk_per_query_gemm(
     qblock = emb.where(F.col(id_col) < q_n).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("_qe")
     )
-    # Size estimate from file metadata — NO job (a count() here measured
-    # 0.12 s, the whole dispatch margin at small sf). Embedding rows are
-    # ~256-310 parquet bytes (64 float32 + ids; float arrays barely
-    # compress), so bytes/256 over-estimates slightly — harmless: the
-    # estimate only picks the branch and sizes chunks, both branches are
-    # exact, and P only moves task granularity.
-    files = emb.inputFiles()
-    nc = (
-        sum(os.path.getsize(f.removeprefix("file:")) for f in files) // 256
-        if files
-        else 0
-    )
+    nc = estimated_rows(emb)
     if nc < GEMM_MIN_ROWS:
         # Definitional expression form for small corpora: the Python
         # crossing's fixed cost exceeds the whole n·q codegen arithmetic

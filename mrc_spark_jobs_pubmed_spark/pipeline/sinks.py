@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from mrc_spark_jobs_pubmed_spark import storage
+
 
 def validate(input_path: str, output_path: str) -> None:
     """A31: fail fast when a job would read and write the same path."""
@@ -71,7 +73,7 @@ def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFra
     """Distinct `key` values already in a parquet sink; None if the path
     does not exist yet. The sink is read with the key's schema, so a sink
     holding no data files gives zero keys; any other read error raises."""
-    if not os.path.exists(path):
+    if not storage.exists(spark, path):
         return None
     return spark.read.schema(T.StructType([key])).parquet(path).select(key.name).distinct()
 

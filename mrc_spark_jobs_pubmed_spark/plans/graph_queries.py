@@ -21,14 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import hashlib
-import os
 
+from mrc_spark_jobs_pubmed_spark import storage
 from mrc_spark_jobs_pubmed_spark.plans.registry import register
-from mrc_spark_jobs_pubmed_spark.sources.catalog import (
-    _scan_bytes,
-    load_table,
-    table_path,
-)
+from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table, table_path
 
 PR_ITERS = 3
 PR_TOP = 20
@@ -43,78 +39,47 @@ def _trade_edges(
     spark: SparkSession, sf_dir: str, materialize: bool = True
 ) -> DataFrame:
     """Undirected customer–supplier trade edges (src, dst, w) as a
-    BUCKETED saved table, built once per fixture and shared by every
-    graph query (r4 verdict perf items 2-4: the lineitem x orders
-    distinct edge-build dominated SSSP/LPA/BFS at sf5 and re-ran per
-    query).
-
-    The build — join + (src, dst) group with min-quantity weight +
-    reverse union — runs exactly once per (session, fixture); the table
-    is bucketed AND sorted on src, so every Pregel-style iteration's
-    frontier join consumes a pre-partitioned scan with no edge-side
-    exchange (tests/test_bucketing.py proves the shuffle-free consume),
-    and column pruning drops w for the unweighted consumers. The cache
-    key carries the fixture's byte-size + mtime (the _FAN_OUT_NEEDED
-    staleness lesson): regenerating a fixture in-process gets a fresh
-    table, not a stale layout. On a real cluster the same table lives
-    in the metastore and amortizes across jobs, not just queries.
+    BUCKETED saved table, built by the first graph query of each session
+    (its timing includes the build) and shared by the rest (r4 verdict
+    perf items 2-4: the lineitem x orders distinct edge-build dominated
+    SSSP/LPA/BFS at sf5 and re-ran per query). The table is bucketed AND
+    sorted on src, so every Pregel-style iteration's frontier join
+    consumes a pre-partitioned scan with no edge-side exchange
+    (tests/test_bucketing.py), and column pruning drops w for the
+    unweighted consumers. The name carries the fixture path and
+    lineitem's data bytes + newest mtime, so a fixture regenerated
+    in-process gets a fresh table; files a previous session left at the
+    table's location are deleted, never re-registered.
     """
-    path = table_path(sf_dir, "lineitem")
-    if os.path.isdir(path):
-        mtime = max(
-            (os.path.getmtime(os.path.join(r, f)) for r, _d, fs in os.walk(path) for f in fs),
-            default=0.0,
-        )
-    else:
-        mtime = os.path.getmtime(path)
-    tok = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{_scan_bytes(path)}|{mtime}".encode()
-    ).hexdigest()[:12]
+    size, mtime = storage.stat(spark, table_path(sf_dir, "lineitem"))
+    tok = hashlib.md5(f"{sf_dir}|{size}|{mtime}".encode()).hexdigest()[:12]
     name = f"trade_edges_{tok}"
     if not spark.catalog.tableExists(name):
-        # The in-memory catalog dies with the session but the warehouse
-        # directory survives: a complete previous write (_SUCCESS marker)
-        # is re-registered as a bucketed table over the existing files —
-        # cross-SESSION amortization, the metastore behavior a real
-        # cluster gets for free. Incomplete leftovers are rebuilt.
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        loc = os.path.join(warehouse, name)
-        if os.path.exists(os.path.join(loc, "_SUCCESS")):
-            spark.sql(
-                f"CREATE TABLE {name} (src BIGINT, dst BIGINT, w BIGINT) "
-                f"USING PARQUET CLUSTERED BY (src) SORTED BY (src) "
-                f"INTO {_EDGE_TABLE_BUCKETS} BUCKETS LOCATION '{loc}'"
+        warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        storage.remove(spark, f"{warehouse}/{name}")
+        li = load_table(spark, "lineitem", sf_dir)
+        orders = load_table(spark, "orders", sf_dir)
+        e0 = (
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .groupBy(
+                F.col("o_custkey").alias("src"),
+                (F.col("l_suppkey") + _SUPP_OFFSET).alias("dst"),
             )
-        else:
-            if os.path.exists(loc):
-                import shutil
-
-                shutil.rmtree(loc)
-            li = load_table(spark, "lineitem", sf_dir)
-            orders = load_table(spark, "orders", sf_dir)
-            e0 = (
-                li.join(orders, li.l_orderkey == orders.o_orderkey)
-                .groupBy(
-                    F.col("o_custkey").alias("src"),
-                    (F.col("l_suppkey") + _SUPP_OFFSET).alias("dst"),
-                )
-                .agg(F.min("l_quantity").cast("long").alias("w"))
-            )
-            edges = e0.unionByName(
-                e0.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-                )
-            )
-            (
-                # pre-shuffle on the bucket key so each task owns
-                # exactly one bucket: 32 files instead of tasks x
-                # buckets small files, and the sort is per-bucket-local
-                edges.repartition(_EDGE_TABLE_BUCKETS, "src")
-                .write.bucketBy(_EDGE_TABLE_BUCKETS, "src")
-                .sortBy("src")
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
+            .agg(F.min("l_quantity").cast("long").alias("w"))
+        )
+        edges = e0.unionByName(
+            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+        (
+            # pre-shuffle on the bucket key so each task owns exactly
+            # one bucket: 32 files instead of tasks x buckets small
+            # files, and the sort is per-bucket-local
+            edges.repartition(_EDGE_TABLE_BUCKETS, "src")
+            .write.bucketBy(_EDGE_TABLE_BUCKETS, "src")
+            .sortBy("src")
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
     # One in-memory copy per (session, fixture): the Pregel-style loops
     # re-read edges every iteration, and a per-QUERY localCheckpoint
     # re-materialized ~2 GB at sf5 on every invocation (measured

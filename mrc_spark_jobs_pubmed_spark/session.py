@@ -18,6 +18,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 16g. In local mode the
+    driver JVM holds every executor; the other half is left to the
+    forked Python workers and the OS."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16 << 10, phys_mb // 2)}m"
+
+
 def get_session(
     app_name: str = "mrc-spark-jobs-pubmed-spark",
     master: str | None = None,
@@ -37,7 +45,7 @@ def get_session(
     # default heap OOMs around sf1 (6M-row lineitem + 32 concurrent
     # hash-agg partitions). Must be set before the JVM launches, hence
     # here and not per-query. On a real cluster spark-submit overrides.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", driver_mem)

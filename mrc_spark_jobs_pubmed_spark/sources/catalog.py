@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mrc_spark_jobs_pubmed_spark import storage
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLE_SCHEMAS: dict[str, T.StructType] = {
@@ -204,36 +206,25 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
     df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
-    if name in ("documents", "embeddings") and _scan_bytes(path) >= FAN_OUT_MIN_BYTES:
-        # The two corpus tables feed tokenize/regex/vector pipelines
-        # where per-row CPU dwarfs a one-pass shuffle; the relational
-        # tables don't (see fan_out), and below FAN_OUT_MIN_BYTES the
-        # shuffle overhead wins. Projection pruning still pushes below
-        # the exchange, so metadata-only document queries shuffle only
-        # the columns they read.
-        df = fan_out(df, cache_key=path)
+    if name in ("documents", "embeddings"):
+        size, mtime = storage.stat(spark, path)
+        if size >= FAN_OUT_MIN_BYTES:
+            # The two corpus tables feed tokenize/regex/vector pipelines
+            # where per-row CPU dwarfs a one-pass shuffle; the relational
+            # tables don't (see fan_out), and below FAN_OUT_MIN_BYTES the
+            # shuffle overhead wins. Projection pruning still pushes below
+            # the exchange, so metadata-only document queries shuffle only
+            # the columns they read.
+            df = fan_out(df, cache_key=(path, size, mtime))
     return df
 
 
-# Partition-probe results by (path, target, freshness): physical
-# planning for getNumPartitions costs ~100 ms, and a table's scan
-# layout is fixed for a given set of files. The freshness token
-# (scan bytes + newest mtime) invalidates the entry when a test
-# regenerates the fixture at the same path in-process (r4 ADVICE:
-# the (path, target)-only key reused a stale partition-count decision).
+# Partition-probe results by (cache_key, target): physical planning for
+# getNumPartitions costs ~100 ms, and a table's scan layout is fixed for
+# a given set of files. load_table's key is (path, data bytes, newest
+# mtime), so a fixture regenerated at the same path in-process misses
+# (r4 ADVICE: a (path, target)-only key reused a stale decision).
 _FAN_OUT_NEEDED: dict[tuple, bool] = {}
-
-
-def _freshness_token(path: str) -> tuple[int, float]:
-    if os.path.isfile(path):
-        return os.path.getsize(path), os.path.getmtime(path)
-    size = mtime = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            p = os.path.join(root, f)
-            size += os.path.getsize(p)
-            mtime = max(mtime, os.path.getmtime(p))
-    return size, mtime
 
 # Below this compressed-scan volume the repartition's shuffle + extra
 # stage costs more than single-threaded per-row work saves — measured
@@ -241,19 +232,10 @@ def _freshness_token(path: str) -> tuple[int, float]:
 # at sf1 (5.8 MB) fan-out wins 4-8x. Compressed bytes is the only
 # cheap static proxy for per-row CPU volume; at production scale every
 # table clears this by orders of magnitude (and is wide anyway).
-FAN_OUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_OUT_MIN_BYTES", 4 << 20))
+FAN_OUT_MIN_BYTES = 4 << 20
 
 
-def _scan_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
-def fan_out(df: DataFrame, cache_key: str | None = None) -> DataFrame:
+def fan_out(df: DataFrame, cache_key: tuple) -> DataFrame:
     """Decouple scan parallelism from file layout for CPU-heavy per-row
     stages (tokenize / regex / HOF / vector-math pipelines).
 
@@ -269,14 +251,10 @@ def fan_out(df: DataFrame, cache_key: str | None = None) -> DataFrame:
     single-threaded scan saves (measured on TPC-H Q1).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    key = (cache_key, target, _freshness_token(cache_key)) if cache_key else None
-    if key is not None and key in _FAN_OUT_NEEDED:
-        needed = _FAN_OUT_NEEDED[key]
-    else:
-        needed = df.rdd.getNumPartitions() < target
-        if key is not None:
-            _FAN_OUT_NEEDED[key] = needed
-    return df.repartition(target) if needed else df
+    key = (cache_key, target)
+    if key not in _FAN_OUT_NEEDED:
+        _FAN_OUT_NEEDED[key] = df.rdd.getNumPartitions() < target
+    return df.repartition(target) if _FAN_OUT_NEEDED[key] else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

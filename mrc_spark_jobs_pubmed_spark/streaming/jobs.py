@@ -15,11 +15,11 @@ File-source replay of events.parquet drives deterministic tests
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mrc_spark_jobs_pubmed_spark import storage
 from mrc_spark_jobs_pubmed_spark.sources.catalog import events_read_plan
 
 
@@ -40,15 +40,13 @@ from mrc_spark_jobs_pubmed_spark.sources.catalog import events_read_plan
 # genuinely absent version directory means "first batch".
 
 
-def _state_versions(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
+def _state_versions(spark: SparkSession, state_dir: str) -> list[int]:
     return sorted(
         int(d[1:])
-        for d in os.listdir(state_dir)
+        for d in storage.listdir(spark, state_dir)
         if d.startswith("v")
         and d[1:].isdigit()
-        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
+        and storage.exists(spark, os.path.join(state_dir, d, "_SUCCESS"))
     )
 
 
@@ -57,7 +55,7 @@ def read_state(spark: SparkSession, state_dir: str, batch_id: int) -> DataFrame 
     None on a true first batch. Versions > batch_id (possible only if a
     checkpoint was deleted while state was kept) are ignored rather
     than merged twice."""
-    versions = [v for v in _state_versions(state_dir) if v <= batch_id]
+    versions = [v for v in _state_versions(spark, state_dir) if v <= batch_id]
     if not versions:
         return None
     return spark.read.parquet(os.path.join(state_dir, f"v{versions[-1]}"))
@@ -68,10 +66,11 @@ def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
     overwrite of v{batch_id} only ever replaces a partial attempt of the
     SAME batch; completed older versions are untouched until the new
     _SUCCESS exists."""
+    spark = df.sparkSession
     df.write.mode("overwrite").parquet(os.path.join(state_dir, f"v{batch_id}"))
-    for v in _state_versions(state_dir):
+    for v in _state_versions(spark, state_dir):
         if v != batch_id:
-            shutil.rmtree(os.path.join(state_dir, f"v{v}"), ignore_errors=True)
+            storage.remove(spark, os.path.join(state_dir, f"v{v}"))
 
 WATERMARK = "10 minutes"
 TUMBLE = "5 minutes"

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import duckdb
 import pytest
 
@@ -17,6 +19,25 @@ TABLES = (
 def spark():
     s = get_session(app_name="engine-tests", shuffle_partitions=8)
     yield s
+
+
+_VIEWFS_MOUNTS = itertools.count()
+
+
+@pytest.fixture
+def viewfs(spark):
+    """`mount(local_dir)` -> a `viewfs://` URI over that local directory:
+    a Hadoop mount table, so tests drive a non-`file:` URI offline (the
+    local `os.path` calls see nothing at it). Hadoop caches one FileSystem
+    per scheme and authority, so every mount gets its own authority."""
+    conf = spark._jsc.hadoopConfiguration()
+
+    def mount(local_dir) -> str:
+        auth = f"mnt{next(_VIEWFS_MOUNTS)}"
+        conf.set(f"fs.viewfs.mounttable.{auth}.link./data", f"file://{local_dir}")
+        return f"viewfs://{auth}/data"
+
+    return mount
 
 
 @pytest.fixture(scope="session")

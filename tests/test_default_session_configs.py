@@ -27,3 +27,18 @@ def test_former_red_queries_exact_under_bone_stock_session():
     )
     assert r.returncode == 0, (r.stdout[-3000:], r.stderr[-1500:])
     assert "DIFF" not in r.stdout, r.stdout[-3000:]
+
+
+def test_driver_memory_default_is_sized_from_the_host(monkeypatch):
+    from mrc_spark_jobs_pubmed_spark import session
+
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * (1 << 30) // 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+
+    host(4)
+    assert session.default_driver_memory() == "2048m"
+    host(15)
+    assert session.default_driver_memory() == "7680m"
+    host(256)
+    assert session.default_driver_memory() == "16384m"  # today's 16g cap

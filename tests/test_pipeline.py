@@ -360,6 +360,21 @@ def test_pipeline_fetches_each_page_once_and_resume_fetches_none(spark, tmp_path
     assert _sink_digests(spark, out) == before
 
 
+def test_pipeline_resume_into_a_viewfs_out_dir_fetches_none(spark, tmp_path, viewfs):
+    # a non-file: URI must resume like a local path: the sink's keys are
+    # found through Hadoop, not os.path (which sees nothing at a URI)
+    out = f"{viewfs(tmp_path)}/pm"
+    run1, run2 = tmp_path / "calls1", tmp_path / "calls2"
+    run_pipeline(spark, out, 2020, 2020, fetcher=_counting_fetcher(run1))
+    assert set(_calls(run1)) == _all_pages(spark, 2020)
+    n = spark.read.parquet(f"{out}/articles").count()
+    assert n > 0 and (tmp_path / "pm" / "articles").is_dir()
+
+    run_pipeline(spark, out, 2020, 2020, fetcher=_counting_fetcher(run2))
+    assert _calls(run2) == {}
+    assert spark.read.parquet(f"{out}/articles").count() == n
+
+
 def test_pipeline_refetches_only_the_page_that_exhausted_retries(spark, tmp_path):
     out = str(tmp_path / "pm")
     pages = sorted(_all_pages(spark, 2020))

@@ -243,11 +243,16 @@ def test_retrieval_metrics_gemm_branch_matches_inline_branch(spark, monkeypatch)
     # only sound because both branches produce identical metric rows —
     # pin that on the real sf0.001 fixture (exercises ties, label
     # joins, and the n_relevant side identically through both paths).
+    # The GEMM leg also lowers the helper's own size floor: otherwise
+    # topk_per_query_gemm sends the tiny fixture back to its inline form
+    # and the chunked-GEMM kernel never runs.
+    from mrc_spark_jobs_pubmed_spark.operators import similarity as S
     from mrc_spark_jobs_pubmed_spark.plans import similarity_queries as SQ
 
     sf_dir = "/root/testdata/sf0.001"
 
     monkeypatch.setattr(SQ, "RM_GEMM_MIN_ROWS", 0)
+    monkeypatch.setattr(S, "GEMM_MIN_ROWS", 0)
     gemm = sorted(
         tuple(r) for r in SQ.sim_retrieval_metrics(spark, sf_dir).collect()
     )

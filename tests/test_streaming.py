@@ -5,6 +5,7 @@ forms when the whole fixture is replayed through micro-batches."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -205,8 +206,6 @@ def test_transform_with_state_running_count(spark, tmp_path):
     coverage above does not depend on it); on a protobuf-equipped
     cluster it runs.
     """
-    import pytest
-
     try:
         from google.protobuf import descriptor  # noqa: F401
     except ImportError:
@@ -560,15 +559,17 @@ def test_stateful_ewma_stream_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_versioned_state_survives_partial_write(spark, tmp_path):
+@pytest.mark.parametrize("uri", ["local", "viewfs"])
+def test_versioned_state_survives_partial_write(spark, tmp_path, viewfs, uri):
     """Crash-safety contract of the foreachBatch serving state (r4
     ADVICE): a partial (no _SUCCESS) version directory — the artifact a
     crash mid-write leaves behind — must be IGNORED by read_state, and
     write_state must prune only after the new version is complete, so
-    the last good state can never be destroyed."""
+    the last good state can never be destroyed. Run on a local path and
+    on a viewfs:// URI over the same directory."""
     import os
 
-    state_dir = str(tmp_path / "state")
+    state_dir = str(tmp_path / "state") if uri == "local" else f"{viewfs(tmp_path)}/state"
 
     df1 = spark.range(3).select(F.col("id").alias("k"), F.lit(1).alias("v"))
     J.write_state(df1, state_dir, batch_id=0)
@@ -585,7 +586,7 @@ def test_versioned_state_survives_partial_write(spark, tmp_path):
     # the replayed batch 1 overwrites its own partial attempt and prunes v0
     J.write_state(df2, state_dir, batch_id=1)
     assert J.read_state(spark, state_dir, 5).count() == 7
-    assert sorted(os.listdir(state_dir)) == ["v1"]
+    assert sorted(os.listdir(tmp_path / "state")) == ["v1"]
 
     # a version NEWER than the replaying batch id is never served
     assert J.read_state(spark, state_dir, 0) is None
